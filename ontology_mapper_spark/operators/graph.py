@@ -8,11 +8,14 @@ edge is still emitted), direct children (IS_A) and direct instances
 (INSTANCE_OF). Node labels come from the parents/children map values, with
 IRI-fragment fallback.
 
-Spark design: one global edge DataFrame; the ancestor closure is an
-iterative frontier self-join to fixpoint with ``localCheckpoint`` per round
-to cut lineage (SURVEY.md §4) — no GraphFrames dependency. Depth is bounded
-by the ontology DAG height (tens), not data size; each round is one
-broadcast-able join on the (small) edge dimension.
+Spark design: one global edge DataFrame; the ancestor closure is a
+semi-naive frontier self-join to fixpoint, run by ``iterate.fixpoint``
+(one lazily checkpointed closure relation per round, superseded rounds
+released as they go; SURVEY.md §4) — no GraphFrames dependency. Depth is
+bounded by the ontology DAG height (tens), not data size; each round is
+one broadcast-able join on the (small) edge dimension. The closure and
+``connected_components`` leave no cache behind but the relation they
+return.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ontology_mapper_spark.functions.curie import label_from_iri_col
+from ontology_mapper_spark.operators.iterate import _release, fixpoint
 
 IS_A = "IS_A"
 INSTANCE_OF = "INSTANCE_OF"
@@ -55,55 +59,47 @@ def ancestor_closure(
     Reference recursion (``term_graph_generator.py:29-38``) only walks
     through ancestors present in the collection; edges here originate from
     retained terms only, so paths stop at filtered-out nodes exactly like
-    the reference. Cycle-safe: the frontier is anti-joined against the
-    accumulated closure, so revisits are dropped and the loop reaches a
-    fixpoint even on cyclic inputs (the reference would recurse forever).
+    the reference. Cycle-safe: a reached pair the closure already holds
+    is not new, so revisits are dropped and the loop reaches a fixpoint
+    even on cyclic inputs (the reference would recurse forever).
+
+    Physical shape: a semi-naive frontier self-join run by
+    ``iterate.fixpoint``. The state is ONE checkpointed relation
+    ``(term, anc, _new)`` holding the whole closure so far, with ``_new``
+    marking the frontier. Each round joins the frontier to the direct
+    edges and folds the pairs it reaches into the closure with one
+    aggregate keyed on (term, anc): a pair is new iff no closure row
+    carries it. That single shuffle both dedups the reached pairs and
+    drops revisits, and it keeps the state at a fixed partition count.
+    Trade-off: a round writes |closure| rows instead of |frontier| rows,
+    in exchange for a plan that reads one leaf however deep the
+    hierarchy (a union over per-round frontier pieces grows one leaf per
+    round). The write costs no extra job: the checkpoint materializes
+    inside the probe's job. Rounds = the longest shortest path, in edges.
     """
-    # persist (not localCheckpoint): lazy pin — the edge relation
-    # materializes once inside round 1's frontier checkpoint instead of
-    # paying its own up-front job, and both consumers (hop + the
-    # accumulated closure) read the cache
     edges = (
         onto_terms.select(F.col("iri").alias("term"), F.explode("parents"))
-        .select("term", F.col("key").alias("anc"))
-        .persist()
+        .select("term", F.col("key").alias("anc"), F.lit(True).alias("_new"))
+        .localCheckpoint(eager=False)
     )
     hop = edges.select(F.col("term").alias("mid"), F.col("anc").alias("next_anc"))
-    # the closure is accumulated as a LIST of materialized frontiers and
-    # unioned on demand — the r5 shape re-checkpointed the whole growing
-    # union every round (one extra full materialization job per round);
-    # a union over already-checkpointed pieces is free to build and
-    # costs nothing to re-scan
-    closure_parts = [edges]
-    frontier = edges
-    for _ in range(max_iterations):
-        closure = closure_parts[0]
-        for part in closure_parts[1:]:
-            closure = closure.unionByName(part)
-        step = (
-            frontier.select("term", F.col("anc").alias("mid"))
+
+    def step(closure: DataFrame) -> DataFrame:
+        reached = (
+            closure.filter(F.col("_new"))
+            .select("term", F.col("anc").alias("mid"))
             .join(hop, "mid")
-            .select("term", F.col("next_anc").alias("anc"))
-            .distinct()
+            .select("term", F.col("next_anc").alias("anc"), F.lit(True).alias("_new"))
         )
-        # lazy checkpoint + count(): ONE job materializes the frontier AND
-        # answers the fixpoint test (an eager checkpoint followed by
-        # isEmpty paid two scheduled jobs per round for the same answer)
-        new = step.join(closure, ["term", "anc"], "left_anti").localCheckpoint(
-            eager=False
+        # min(_new) is false iff the closure already holds the pair
+        return (
+            closure.withColumn("_new", F.lit(False))
+            .unionByName(reached)
+            .groupBy("term", "anc")
+            .agg(F.min("_new").alias("_new"))
         )
-        if new.count() == 0:
-            break
-        closure_parts.append(new)
-        frontier = new
-    else:
-        raise RuntimeError(
-            f"ancestor_closure did not converge in {max_iterations} iterations"
-        )
-    out = closure_parts[0]
-    for part in closure_parts[1:]:
-        out = out.unionByName(part)
-    return out
+
+    return fixpoint(step, edges, max_iterations, "ancestor_closure", (edges,))
 
 
 def pagerank_int(
@@ -237,6 +233,7 @@ def pagerank_int(
         .groupBy("node")
         .agg(F.sum("c").alias("s"))
     )
+    cuts = []
     for i in range(1, iterations):
         contrib = (
             e_od.join(
@@ -263,6 +260,7 @@ def pagerank_int(
             # (The LAST round's cut lands on the assembled output below
             # instead, so the returned result is cache-independent.)
             s = s.localCheckpoint()
+            cuts.append(s)
     out = (
         nodes.join(
             s.hint("shuffle_hash"),
@@ -278,14 +276,16 @@ def pagerank_int(
     )
     if iterations % 3 == 0:
         # iteration counts ending on the checkpoint cadence materialize
-        # the final assembly eagerly and drop the cached invariants, so a
-        # long-lived session doesn't accrue per-call cache entries (and
-        # repeated benchmark invocations cannot silently reuse a prior
-        # call's cache). For other iteration counts the returned plan
-        # still references the caches; they stay pinned for the session
-        # (callers may spark.catalog.clearCache()).
+        # the final assembly eagerly and drop the cached invariants and
+        # lineage cuts, so a long-lived session doesn't accrue per-call
+        # cache entries (and repeated benchmark invocations cannot
+        # silently reuse a prior call's cache). For other iteration
+        # counts the returned plan still references the caches; they stay
+        # pinned for the session (callers may spark.catalog.clearCache()).
         out = out.localCheckpoint()
         e_od.unpersist(False)
+        for cut in cuts:
+            _release(cut)
     return out
 
 
@@ -426,12 +426,13 @@ def kg_diff(prev_triples: DataFrame, new_triples: DataFrame) -> DataFrame:
     — both sides shuffle once on (subj, pred, obj), and neither side is
     ever sorted (r6: the sort-merge form paid a full sort of BOTH
     snapshot legs; the triple key is unique-by-construction on each
-    side, so the per-task hash build is |triples| / shuffle partitions
-    with no hot key, the same uniform-build argument as pagerank_int's
-    loop joins — measured ~20% faster at 600k rows). Under an
-    Iceberg/bucketed layout keyed on subj the exchange is partial, and
-    AQE's skew handling covers shuffled-hash joins. No driver
-    materialization at any scale."""
+    side, so there is no hot key — measured ~20% faster at 600k rows).
+    Memory bound: the hash build cannot spill, and AQE's skew handling
+    never splits either side of a FULL OUTER join, so |triples| /
+    ``spark.sql.shuffle.partitions`` rows of one snapshot must fit in
+    one task's execution memory (no sort-merge fallback past that).
+    Under an Iceberg/bucketed layout keyed on subj the exchange is
+    partial. No driver materialization at any scale."""
     milli = lambda c: F.round(F.col(c) * 1000).cast("int")  # noqa: E731
     p = prev_triples.select(
         "subj", "pred", "obj",
@@ -479,10 +480,11 @@ def connected_components(
     """Connected components over an arbitrary edge relation ->
     ``(node, component)`` with component = min node id reachable. Thin
     public facade over the pointer-doubling min-label propagation that
-    backs ``dedup.neardup_clusters`` (O(log diameter) action rounds,
-    localCheckpoint lineage cuts — see its docstring for the physical
-    shape); exposed here because KG consumers want components over
-    co-occurrence / hierarchy edges, not just near-dup pairs."""
+    backs ``dedup.neardup_clusters`` (O(log diameter) rounds of
+    ``iterate.fixpoint``, which releases every checkpoint it supersedes —
+    see its docstring for the physical shape); exposed here because KG
+    consumers want components over co-occurrence / hierarchy edges, not
+    just near-dup pairs."""
     from ontology_mapper_spark.operators.dedup import neardup_clusters
 
     pairs = edges.select(F.col(src).alias("doc_a"), F.col(dst).alias("doc_b"))
@@ -498,7 +500,7 @@ def term_graph_nodes_edges(onto_terms: DataFrame) -> tuple[DataFrame, DataFrame]
     terms = onto_terms.select(
         "iri", F.col("labels")[0].alias("display_label"), "parents", "children",
         "instances",
-    ).cache()
+    )
     closure = ancestor_closure(onto_terms)
     # member set per graph: the term itself + all ancestors
     members = (
@@ -514,52 +516,34 @@ def term_graph_nodes_edges(onto_terms: DataFrame) -> tuple[DataFrame, DataFrame]
     parent_edges = terms.select(
         F.col("iri").alias("src"), F.explode("parents").alias("dst", "dst_label")
     )
-    graph_edges = (
+    all_edges = (
         members.join(parent_edges, members.member == parent_edges.src)
         .select("graph_iri", "src", "dst", F.lit(IS_A).alias("label"))
     )
-    child_edges = terms.select(
-        F.col("iri").alias("graph_iri"),
-        F.explode("children").alias("child", "child_label"),
-    ).select(
-        "graph_iri",
-        F.col("child").alias("src"),
-        F.col("graph_iri").alias("dst"),
-        F.lit(IS_A).alias("label"),
-    )
-    inst_edges = terms.select(
-        F.col("iri").alias("graph_iri"),
-        F.explode("instances").alias("inst", "inst_label"),
-    ).select(
-        "graph_iri",
-        F.col("inst").alias("src"),
-        F.col("graph_iri").alias("dst"),
-        F.lit(INSTANCE_OF).alias("label"),
-    )
-    all_edges = graph_edges.unionByName(child_edges).unionByName(inst_edges).distinct()
-
     # nodes: self + every relation-map entry of members (+children/instances)
-    own = terms.select(
+    nodes = terms.select(
         F.col("iri").alias("graph_iri"),
         F.col("iri").alias("node_id"),
         F.col("display_label").alias("node_label"),
-    )
-    # children/instances only expand from the graph root, not from ancestors
-    rel_root = []
-    for rel in ("children", "instances"):
-        rel_root.append(
-            terms.select(
-                F.col("iri").alias("graph_iri"),
-                F.explode(rel).alias("node_id", "node_label"),
-            )
-        )
-    anc_parent_nodes = (
+    ).unionByName(
         members.join(terms, members.member == terms.iri)
         .select("graph_iri", F.explode("parents").alias("node_id", "node_label"))
     )
-    nodes = own.unionByName(anc_parent_nodes)
-    for df in rel_root:
-        nodes = nodes.unionByName(df)
+    # children/instances only expand from the graph root, not from ancestors
+    for rel, label in (("children", IS_A), ("instances", INSTANCE_OF)):
+        root = terms.select(
+            F.col("iri").alias("graph_iri"),
+            F.explode(rel).alias("node_id", "node_label"),
+        )
+        all_edges = all_edges.unionByName(
+            root.select(
+                "graph_iri",
+                F.col("node_id").alias("src"),
+                F.col("graph_iri").alias("dst"),
+                F.lit(label).alias("label"),
+            )
+        )
+        nodes = nodes.unionByName(root)
     nodes = nodes.withColumn(
         "node_label",
         F.when(
@@ -567,7 +551,7 @@ def term_graph_nodes_edges(onto_terms: DataFrame) -> tuple[DataFrame, DataFrame]
             label_from_iri_col(F.col("node_id")),
         ).otherwise(F.col("node_label")),
     ).dropDuplicates(["graph_iri", "node_id"])
-    return nodes, all_edges
+    return nodes, all_edges.distinct()
 
 
 def term_graphs_json(onto_terms: DataFrame) -> DataFrame:
